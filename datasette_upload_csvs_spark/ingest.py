@@ -14,7 +14,14 @@ Pipeline parity map (reference = /root/reference/datasette_upload_csvs/__init__.
    :217-222).
 4. table-name derivation + collision suffixing (reference :118-129).
 5. `_csv_progress_` bookkeeping rows: init / complete / error
-   (reference :144-162, :200-214, :224-228).
+   (reference :144-162, :200-214, :224-228). Each row is one
+   parameterized `INSERT INTO ... VALUES` (catalog.insert_row; the
+   table is made once per application with CREATE TABLE IF NOT
+   EXISTS), not a DataFrame write job. Polls for tasks this process
+   wrote are answered from an in-memory latest-row cache filled only
+   after each INSERT succeeds, so they start no Spark job; unknown
+   ids (other processes, entries evicted past the cache's fixed
+   bound) fall back to a table scan.
 
 Scale shape: stages 2-3 are two distributed scans of the file
 (splittable CSV → one partition per ~128 MB); the probe aggregation
@@ -29,6 +36,7 @@ from __future__ import annotations
 import os
 import threading
 import uuid
+from collections import OrderedDict
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -50,11 +58,23 @@ _PROGRESS_SCHEMA = (
     "bytes_todo bigint, bytes_done bigint, rows_done bigint, "
     "started string, completed string, error string, seq bigint"
 )
+_PROGRESS_COLUMNS = [c.split()[0] for c in _PROGRESS_SCHEMA.split(", ")]
 
 # The reference serializes all progress writes through one writer
 # thread per database (execute_write_fn, __init__.py:162); we keep a
 # driver-side lock for the same single-writer guarantee.
 _progress_lock = threading.Lock()
+
+# Highest-seq progress row per (application id, database, task id)
+# that this process has written, so polls need no table scan. Tasks
+# not updated for the longest time are evicted past the bound (each
+# entry is one small row, so it is sized for many late polls, not
+# for memory); their polls fall back to the table. Updated under
+# _progress_lock after the row's INSERT; _latest_lock alone guards
+# reads, so a poll never waits for an INSERT.
+_latest_progress: OrderedDict[tuple, dict] = OrderedDict()
+_LATEST_PROGRESS_MAX = 1000
+_latest_lock = threading.Lock()
 
 
 class Forbidden(Exception):
@@ -425,28 +445,33 @@ def apply_types(df: DataFrame, types: dict[str, str]) -> DataFrame:
     return df.select(*cols)
 
 
+def _progress_key(spark: SparkSession, database: str | None, task_id) -> tuple:
+    return (
+        spark.sparkContext.applicationId,
+        database or spark.catalog.currentDatabase(),
+        task_id,
+    )
+
+
+def _seq_order(row: dict) -> tuple:
+    # the table scan's ORDER BY seq DESC: NULL seqs sort last
+    return (row["seq"] is not None, row["seq"] or 0)
+
+
 def _append_progress(spark: SparkSession, database: str | None, row: dict) -> None:
     full = f"{database}.{PROGRESS_TABLE}" if database else PROGRESS_TABLE
+    row = {c: row.get(c) for c in _PROGRESS_COLUMNS}
+    key = _progress_key(spark, database, row["id"])
     with _progress_lock:
-        df = spark.createDataFrame(
-            [
-                (
-                    row.get("id"),
-                    row.get("filename"),
-                    row.get("database_name"),
-                    row.get("table_name"),
-                    row.get("bytes_todo"),
-                    row.get("bytes_done"),
-                    row.get("rows_done"),
-                    row.get("started"),
-                    row.get("completed"),
-                    row.get("error"),
-                    row.get("seq"),
-                )
-            ],
-            _PROGRESS_SCHEMA,
-        )
-        df.write.mode("append").saveAsTable(full)
+        cat.insert_row(spark, full, _PROGRESS_SCHEMA, row)
+        # only rows the table now holds reach the poll cache
+        with _latest_lock:
+            held = _latest_progress.get(key)
+            if held is None or _seq_order(row) >= _seq_order(held):
+                _latest_progress[key] = row
+            _latest_progress.move_to_end(key)
+            while len(_latest_progress) > _LATEST_PROGRESS_MAX:
+                _latest_progress.popitem(last=False)
 
 
 class _ProgressTicker:
@@ -527,10 +552,22 @@ class _ProgressTicker:
 
 def get_progress(spark: SparkSession, task_id: str, database: str | None = None):
     """Latest progress row for a task (the reference's poll endpoint
-    reads `_csv_progress_` by id, templates/upload_csv.html:188-204)."""
+    reads `_csv_progress_` by id, templates/upload_csv.html:188-204).
+    Tasks this process wrote are answered from memory, without a
+    Spark job; any other id (another process's task, or one evicted
+    from the cache) is looked up in the table."""
     full = f"{database}.{PROGRESS_TABLE}" if database else PROGRESS_TABLE
     if not spark.catalog.tableExists(full):
         return None
+    key = _progress_key(spark, database, task_id)
+    with _latest_lock:
+        row = _latest_progress.get(key)
+    if row is not None:
+        return dict(row)
+    return _scan_progress(spark, full, task_id)
+
+
+def _scan_progress(spark: SparkSession, full: str, task_id: str):
     rows = (
         spark.table(full)
         .filter(F.col("id") == task_id)
@@ -654,26 +691,9 @@ def upload_csv(
         )
 
     physical_base = cat.sanitize_identifier(logical)
-    physical = cat.resolve_collision(spark, physical_base, db)
-
-    _append_progress(
-        spark,
-        db,
-        dict(
-            id=task_id,
-            filename=os.path.basename(path),
-            database_name=db or spark.catalog.currentDatabase(),
-            table_name=physical,
-            bytes_todo=bytes_todo,
-            bytes_done=0,
-            rows_done=0,
-            started=started,
-            completed=None,
-            error=None,
-            seq=0,
-        ),
-    )
-
+    # held until the table exists (or the ingest failed), so a
+    # concurrent same-name upload picks the next suffix
+    physical = cat.reserve_physical_name(spark, physical_base, db)
     ticker = _ProgressTicker(
         spark,
         db,
@@ -689,9 +709,26 @@ def upload_csv(
         group=task_id,
         interval=progress_interval,
     )
-    spark.sparkContext.setJobGroup(task_id, f"ingest {path}")
-    ticker.start()
     try:
+        _append_progress(
+            spark,
+            db,
+            dict(
+                id=task_id,
+                filename=os.path.basename(path),
+                database_name=db or spark.catalog.currentDatabase(),
+                table_name=physical,
+                bytes_todo=bytes_todo,
+                bytes_done=0,
+                rows_done=0,
+                started=started,
+                completed=None,
+                error=None,
+                seq=0,
+            ),
+        )
+        spark.sparkContext.setJobGroup(task_id, f"ingest {path}")
+        ticker.start()
         encoding = detect_encoding(path, sniff_bytes)
         if multiline is None:
             multiline = resolve_multiline(
@@ -783,6 +820,7 @@ def upload_csv(
             error=str(ex),
         )
     finally:
+        cat.release_physical_name(spark, physical, db)
         # the ingest has fully materialized (or failed) by now —
         # drop the extension alias; the caller's original spool file
         # is untouched (hard link) and stays the caller's to clean

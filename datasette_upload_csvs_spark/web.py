@@ -931,7 +931,14 @@ class UploadApp:
         database = unquote(path.split("/")[1]) or None
         if database == "default":
             database = None
-        row = ingest.get_progress(self.spark, task_id, database=database)
+        # a task this process wrote is answered from memory; any other
+        # id scans the table, which must not stall the event loop
+        import asyncio
+
+        row = await asyncio.get_running_loop().run_in_executor(
+            None, lambda: ingest.get_progress(
+                self.spark, task_id, database=database)
+        )
         # _shape=array: the template's fetch expects a JSON array of
         # rows (reference polls the SQLite table through Datasette's
         # JSON API)
